@@ -6,10 +6,12 @@ package (e.g. /root/reference/adscrawler/app_stores/utils.py:178-204,
 available in this environment, so we ship a deterministic PSL subset
 (ICANN section; the reference's default tldextract config likewise
 excludes private suffixes) plus the standard PSL longest-match
-algorithm.  The list is broadcast-sized (a few hundred entries) and is
-shared by the vectorized UDF layer and the pure-Python parity oracle —
-only the *data* is shared, the two extraction code paths are
-independent implementations tested against each other.
+algorithm.  The list (780 entries, at most two labels each) is shared by
+three independent matchers that are tested against each other: the JVM
+SQL expression behind ``canonical_host`` / ``url_canon`` (one ``IN``
+literal list, a hash ``InSet`` after optimization), the pandas UDF
+helpers in ``functions/urls.py`` and the pure-Python parity oracle.
+Only the *data* is shared.
 """
 
 from __future__ import annotations

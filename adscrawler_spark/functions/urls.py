@@ -1,33 +1,116 @@
-"""Vectorized URL canonicalization — the engine's hot-path canonicalizer.
+"""URL canonicalization; the frontier's identity key is pure Spark SQL.
 
-Semantics: SURVEY.md P13/P14; reference behavior at
-/root/reference/adscrawler/app_stores/utils.py:178-204 and
-/root/reference/adscrawler/scrape.py:138-148, golden-tested against
-/root/reference/tests/app_stores/test_scrape_stores.py:42-69.
+Semantics: SURVEY.md P13/P14 and the reference's
+``adscrawler/app_stores/utils.py:178-204`` and
+``adscrawler/scrape.py:138-148``, golden-tested against its
+``tests/app_stores/test_scrape_stores.py:42-69``.
 
-Implementation is Spark-first:
-* scheme/path/port stripping is pure pandas ``.str`` vector ops,
-* PSL suffix matching is memoized over *unique* hosts per Arrow batch —
-  crawl batches are grouped by host, so the per-batch unique count is
-  orders of magnitude below the row count (this is the vectorization
-  that replaces per-row tldextract calls),
-* the murmur3 URL hash stays JVM-side (``F.hash`` == Spark's Murmur3),
-  never in Python.
+``canonical_host`` and ``url_canon`` are JVM expressions with no Python
+step: scheme / userinfo / port / path / query / fragment stripping is
+one anchored ``regexp_replace`` plus ``substring_index`` splits; the PSL
+match tests the last two labels, then the last one, lower-cased, against
+one ``IN`` list of ``PUBLIC_SUFFIXES`` (a hash ``InSet`` once
+optimized); the ``m`` / ``www`` / empty-subdomain collapse compares the
+original-case labels, and only the result is lower-cased.  They are
+SQL functions, created in each session on first use: the suffix list is
+SQL text built once, where ``Column.isin`` would make one py4j round
+trip per suffix on every call, and Spark binds each SQL-function
+argument once, as a projection column.
 
-No row-at-a-time ``udf()`` anywhere (enforced by tests).
+The pandas UDFs below (``root_domain``, ``adstxt_registrable`` and the
+row-wise ``canonical_url`` the tests hold ``url_canon`` against) match
+the PSL once per *unique* host of each Arrow batch.  The URL hashes are
+JVM-side too.  No row-at-a-time ``udf()`` anywhere (enforced by tests).
 """
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from adscrawler_spark.functions.psl import MAX_SUFFIX_LABELS, PUBLIC_SUFFIXES
 
-_IP4 = r"^(\d{1,3}\.){3}\d{1,3}$"
+# The SQL match below tests at most two labels, and quotes the suffixes
+# as bare SQL string literals.
+assert MAX_SUFFIX_LABELS == 2, MAX_SUFFIX_LABELS
+assert all(re.fullmatch(r"[a-z0-9.\-]+", s) for s in PUBLIC_SUFFIXES)
+
+_SUFFIX_IN = "IN (" + ", ".join(f"'{s}'" for s in sorted(PUBLIC_SUFFIXES)) + ")"
+# ``url`` with its scheme and fragment off
+_REST = "substring_index(regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://', ''), '#', 1)"
+# the last k + 1 labels of h (all of h when it has fewer), and the labels
+# before them with their trailing dot ('' when there are none)
+_TAIL = "substring_index(h, '.', -(k + 1))"
+_SUB_DOT = f"left(h, length(h) - length({_TAIL}))"
+
+
+def _authority(rest: str) -> str:
+    """Host of a scheme- and fragment-free URL: path, query, userinfo
+    and port off."""
+    return (
+        f"substring_index(substring_index(substring_index(substring_index("
+        f"{rest}, '/', 1), '?', 1), '@', -1), ':', 1)"
+    )
+
+
+# name -> (parameters, body).  A body may call the functions above it.
+_SQL_FUNCTIONS = {
+    # The reference's subdomain.domain.suffix for a host whose last k
+    # labels matched the PSL (k = 0: none did), with the subdomain
+    # dropped when it is 'm', empty or has a 'www' label.  The domain is
+    # empty when the host is all suffix (hence the leading '.'), and the
+    # suffix when nothing matched (the trailing '.').  IPv4 hosts need
+    # no rule of their own: digits never match a suffix, and the
+    # no-match result equals the reference's IPv4 one, host + '.'.
+    "adscrawler_collapse_labels": ("h STRING, k INT", f"""lower(concat(
+        IF(length(h) - length(replace(h, '.', '')) = k - 1, '.', ''),
+        IF({_SUB_DOT} IN ('', '.', 'm.')
+           OR instr(concat('.', {_SUB_DOT}), '.www.') > 0, {_TAIL}, h),
+        IF(k = 0, '.', '')))"""),
+    "adscrawler_collapse_host": ("h STRING", f"""adscrawler_collapse_labels(h,
+        CASE WHEN instr(h, '.') > 0
+                  AND lower(substring_index(h, '.', -2)) {_SUFFIX_IN} THEN 2
+             WHEN lower(substring_index(h, '.', -1)) {_SUFFIX_IN} THEN 1
+             ELSE 0 END)"""),
+    "adscrawler_canonical_host": (
+        "url STRING", f"adscrawler_collapse_host({_authority(_REST)})"),
+    "adscrawler_canon_rest": ("rest STRING", f"""concat(
+        adscrawler_collapse_host({_authority('rest')}),
+        IF(instr(rest, '/') > 0, substring(rest, instr(rest, '/')), ''))"""),
+    "adscrawler_url_canon": ("url STRING", f"adscrawler_canon_rest({_REST})"),
+}
+
+
+def _sql_function(name: str, col: Column | str) -> Column:
+    """``name(col)``; creates the SQL functions in the active session on
+    their first use there."""
+    spark = SparkSession.active()
+    if not spark.catalog.functionExists(name):
+        for fn, (params, body) in _SQL_FUNCTIONS.items():
+            spark.sql(
+                f"CREATE OR REPLACE TEMPORARY FUNCTION {fn}({params}) "
+                f"RETURNS STRING RETURN {body}"
+            )
+    return F.call_function(name, col)
+
+
+def canonical_host(url: Column | str) -> Column:
+    """extract_domains_with_sub as a JVM expression (utils.py:191-204
+    parity): the URL's host, its subdomain dropped when it is 'm',
+    empty or has a 'www' label, lower-cased; NULL for a NULL URL."""
+    return _sql_function("adscrawler_canonical_host", url)
+
+
+def url_canon(url: Column | str) -> Column:
+    """The frontier's dedup key as a JVM expression: ``canonical_host``
+    plus ``/path?query`` with scheme, userinfo, port and fragment
+    stripped (the row-wise ``canonical_url`` UDF, byte for byte)."""
+    return _sql_function("adscrawler_url_canon", url)
 
 
 def _hosts_from_urls(urls: pd.Series) -> pd.Series:
@@ -79,28 +162,10 @@ def _root_domain(host: str) -> str | None:
 
 
 @pandas_udf(StringType())
-def canonical_host(urls: pd.Series) -> pd.Series:
-    """extract_domains_with_sub, vectorized (utils.py:191-204 parity)."""
-    hosts = _hosts_from_urls(urls)
-    uniq = {h: _canon_with_sub(h) for h in hosts.dropna().unique()}
-    return hosts.map(uniq).astype(object).where(hosts.notna(), None)
-
-
-@pandas_udf(StringType())
 def root_domain(urls: pd.Series) -> pd.Series:
     """extract_root_domain, vectorized (utils.py:178-188 parity)."""
     hosts = _hosts_from_urls(urls)
     uniq = {h: _root_domain(h) for h in hosts.dropna().unique()}
-    return hosts.map(uniq).astype(object).where(hosts.notna(), None)
-
-
-@pandas_udf(StringType())
-def adstxt_fetch_host(urls: pd.Series) -> pd.Series:
-    """Host the app-ads.txt is fetched from (scrape.py:138-148 rule —
-    same collapse rule as canonical_host; kept as its own function so
-    the call-site mirrors the reference's two entry points)."""
-    hosts = _hosts_from_urls(urls)
-    uniq = {h: _canon_with_sub(h) for h in hosts.dropna().unique()}
     return hosts.map(uniq).astype(object).where(hosts.notna(), None)
 
 

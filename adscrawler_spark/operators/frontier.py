@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from adscrawler_spark.functions.urls import canonical_host, url_hash
+from adscrawler_spark.functions.urls import url_canon, url_hash
 from adscrawler_spark.streaming.frontier_gen import HOT_IOS, HOT_PLAY
 
 from adscrawler_spark.session import local_df
@@ -50,61 +50,22 @@ HOT_LANES = 32
 NEVER_CRAWLED_DAYS = 36_500  # NULLS-FIRST analog for the decay product
 
 
-_SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"
-
-
 def with_canonical(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Attach url_canon / url_hash (murmur3) / url_hash64 / row_hash64.
 
-    Dictionary-encoded canonicalization: the scheme/path/port splitting
-    is pure JVM string expressions; the PSL host collapse (the only
-    Python step) runs over the *distinct authorities* and joins back —
-    Python cost is O(unique hosts), not O(rows).  At web scale that is
-    the difference between 10^7 UDF rows and 10^10; AQE broadcasts the
-    host dictionary when it is small.  Semantics are byte-identical to
-    the row-wise ``canonical_url`` UDF (asserted in tests)."""
-    no_scheme = F.regexp_replace(F.col(url_col), _SCHEME_RE, "")
-    no_frag = F.substring_index(no_scheme, "#", 1)
-    tagged = df.withColumn("_nofrag", no_frag)
-    authority = F.substring_index(
-        F.substring_index(
-            F.substring_index(
-                F.substring_index(F.col("_nofrag"), "/", 1), "?", 1
-            ),
-            "@",
-            -1,
-        ),
-        ":",
-        1,
-    )
-    path = F.when(
-        F.instr("_nofrag", "/") > 0,
-        F.expr("substring(_nofrag, instr(_nofrag, '/'))"),
-    ).otherwise(F.lit(""))
-
-    tagged = tagged.withColumn("_auth", authority)
-    hosts = (
-        tagged.select("_auth")
-        .where(F.col("_auth").isNotNull())
-        .distinct()
-        .withColumn("_chost", canonical_host(F.col("_auth")))
-    )
-    return (
-        tagged.join(hosts, "_auth", "left")
-        .withColumn(
-            "url_canon",
-            F.when(
-                F.col(url_col).isNotNull(), F.concat(F.col("_chost"), path)
-            ),
-        )
-        .drop("_auth", "_chost", "_nofrag")
-        .withColumn("url_hash", url_hash(F.col("url_canon")))
-        .withColumn("url_hash64", F.xxhash64(F.col("url_canon")))
+    One narrow projection: ``url_canon`` (host split, PSL collapse and
+    path) is a JVM expression, so canonicalization runs inside whole-stage
+    codegen with no Python step, exchange or join.  Semantics are
+    byte-identical to the row-wise ``canonical_url`` UDF (asserted in
+    tests)."""
+    return df.withColumn("url_canon", url_canon(url_col)).withColumns({
+        "url_hash": url_hash(F.col("url_canon")),
+        "url_hash64": F.xxhash64(F.col("url_canon")),
         # unique per raw URL — the final claim-order tie-break that makes
         # the schedule total (different raw URLs can share url_canon and
         # every priority column).
-        .withColumn("row_hash64", F.xxhash64(F.col(url_col)))
-    )
+        "row_hash64": F.xxhash64(F.col(url_col)),
+    })
 
 
 def listing_order_cols(now: str) -> list[F.Column]:

@@ -60,10 +60,11 @@ def with_url_hash64(df: DataFrame, canon_col: str = "url_canon") -> DataFrame:
     return df.withColumn("url_hash64", F.xxhash64(canon_col))
 
 
-def _positions(h: np.ndarray, k: int, m: int) -> np.ndarray:
+def _positions(h: np.ndarray, k: int, m: int | np.ndarray) -> np.ndarray:
     """(n, k) bit positions: splitmix64 avalanche of (h, i) — k
     effectively-independent hash functions (plain double hashing
-    correlates badly when the stride lands near a divisor of m)."""
+    correlates badly when the stride lands near a divisor of m).  ``m``
+    is one bitset size, or an (n, 1) column of per-row sizes."""
     z = h.astype(np.uint64)[:, None] + _MIX * (
         np.arange(1, k + 1, dtype=np.uint64)[None, :]
     )
@@ -72,10 +73,10 @@ def _positions(h: np.ndarray, k: int, m: int) -> np.ndarray:
     z ^= z >> np.uint64(27)
     z *= np.uint64(0x94D049BB133111EB)
     z ^= z >> np.uint64(31)
-    return z % np.uint64(m)
+    return z % np.asarray(m, dtype=np.uint64)
 
 
-def _build_one(pdf: pd.DataFrame) -> pd.DataFrame:
+def _build_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     h = pdf["url_hash64"].to_numpy()
     n = len(h)
     m = max(64, int(64 * math.ceil(n * BITS_PER_KEY / 64)))
@@ -85,7 +86,7 @@ def _build_one(pdf: pd.DataFrame) -> pd.DataFrame:
                      np.uint64(1) << (pos & np.uint64(63)))
     return pd.DataFrame(
         {
-            "bucket": [int(pdf["bucket"].iloc[0])],
+            "bucket": [int(key[0])],
             "n_keys": [n],
             "m_bits": [m],
             "k": [NUM_HASHES],
@@ -101,10 +102,12 @@ def build_bloom_filters(
 
     seen must carry ``url_hash64``; sizing is parametric per bucket
     (BITS_PER_KEY), so a 10^10-row seen set shards into `buckets`
-    independently-sized bitsets built in parallel."""
+    independently-sized bitsets built in parallel.  Only the bucket and
+    the hash cross the exchange: the build never reads url_canon, and
+    grouping by an expression keeps the key from riding along twice."""
     return (
-        seen.withColumn("bucket", bucket_col(buckets=buckets))
-        .groupBy("bucket")
+        seen.select("url_hash64")
+        .groupBy(bucket_col(buckets=buckets).alias("bucket"))
         .applyInPandas(_build_one, FILTER_SCHEMA)
     )
 
@@ -165,37 +168,33 @@ def probe_unseen(
     total_bytes = estimate_filter_bytes(seen_count, buckets)
 
     if total_bytes <= broadcast_threshold:
-        flt_rows = filters.collect()
-        tables = {
-            int(r.bucket): (
-                int(r.m_bits),
-                int(r.k),
-                np.frombuffer(bytes(r.bits), dtype=np.uint64),
-            )
-            for r in flt_rows
-        }
+        # All buckets' bitsets in one word array: bucket b's bitset is
+        # m_bits[b] bits from word offsets[b] on.  A bucket no seen key
+        # fell in gets one empty word, so its probes answer False.
+        m_bits = np.full(buckets, 64, dtype=np.uint64)
+        chunks = [np.zeros(1, dtype=np.uint64)] * buckets
+        k = NUM_HASHES
+        for r in filters.collect():
+            assert 0 <= r.bucket < buckets and r.k == k, (r.bucket, r.k)
+            m_bits[r.bucket] = r.m_bits
+            chunks[r.bucket] = np.frombuffer(bytes(r.bits), dtype=np.uint64)
+        offsets = np.cumsum([0] + [len(c) for c in chunks[:-1]])
         # explicit broadcast: the bitsets ship once per executor, not
         # once per task inside the UDF closure (tens of MB × thousands
         # of tasks otherwise).
-        bc_tables = frontier.sparkSession.sparkContext.broadcast(tables)
+        bc_table = frontier.sparkSession.sparkContext.broadcast(
+            (np.concatenate(chunks), offsets, m_bits)
+        )
 
         @pandas_udf(BooleanType())
         def bloom_maybe(h: pd.Series) -> pd.Series:
-            tbls = bc_tables.value
+            words, offsets, m_bits = bc_table.value
             hv = h.to_numpy()
-            out = np.zeros(len(hv), dtype=bool)
             b = hv % buckets  # numpy % is non-negative for buckets > 0
-            for bucket, (m, k, words) in tbls.items():
-                mask = b == bucket
-                if not mask.any():
-                    continue
-                pos = _positions(hv[mask], k, m)
-                hit = (
-                    words[(pos >> np.uint64(6)).astype(np.int64)]
-                    >> (pos & np.uint64(63))
-                ) & np.uint64(1)
-                out[mask] = hit.all(axis=1)
-            return pd.Series(out)
+            pos = _positions(hv, k, m_bits[b][:, None])
+            idx = offsets[b][:, None] + (pos >> np.uint64(6)).astype(np.int64)
+            hit = (words[idx] >> (pos & np.uint64(63))) & np.uint64(1)
+            return pd.Series(hit.all(axis=1))
 
         probed = frontier.withColumn(
             "maybe_seen", bloom_maybe("url_hash64")

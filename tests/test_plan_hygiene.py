@@ -16,6 +16,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plan_nodes(df):
+    """The JVM nodes of df's physical plan, AQE's wrapper unwrapped."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        yield node
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -150,6 +163,38 @@ def test_claim_path_has_no_global_sort(spark):
     out = fo.ranked_top_n(base, fo.listing_order_cols(now), 500)
     plan = _plan(out)
     assert "Exchange SinglePartition" not in plan
+
+
+def test_canonicalization_is_one_narrow_jvm_projection(spark):
+    """with_canonical must stay row-local JVM expressions: no Python
+    evaluation, no exchange and no join — the PSL collapse is a Catalyst
+    expression, not a UDF over a distinct-host dictionary joined back."""
+    from adscrawler_spark.operators import frontier as fo
+    from adscrawler_spark.streaming.frontier_gen import synth_frontier
+
+    plan = _plan(fo.with_canonical(synth_frontier(spark, 2000)))
+    for node in ("ArrowEvalPython", "BatchEvalPython", "Exchange", "Join"):
+        assert node not in plan, (node, plan)
+
+
+def test_bloom_build_shuffles_bucket_and_hash_only(spark):
+    """The Bloom build reads url_hash64 only, so its one exchange must
+    carry exactly (bucket, url_hash64) — no url_canon strings, and no
+    second copy of the grouping key."""
+    from adscrawler_spark.operators.seen import build_bloom_filters
+
+    seen = spark.range(2000).select(
+        F.concat(F.lit("a.com/"), F.col("id")).alias("url_canon")
+    ).withColumn("url_hash64", F.xxhash64("url_canon"))
+    exchanges = [
+        n for n in _plan_nodes(build_bloom_filters(seen))
+        if n.nodeName() == "Exchange"
+    ]
+    assert len(exchanges) == 1, exchanges
+    out = exchanges[0].child().output()
+    assert [out.apply(i).name() for i in range(out.size())] == [
+        "bucket", "url_hash64"
+    ]
 
 
 def test_frontend_topk_uses_window_group_limit(spark):

@@ -1,15 +1,16 @@
-"""Canonicalizer parity: golden table from the reference test-suite
-(/root/reference/tests/app_stores/test_scrape_stores.py:42-69) plus
-cross-implementation equality (Spark vectorized UDF vs pure-Python
-oracle) on generated inputs."""
+"""Canonicalizer parity: the golden table from the reference's test-suite
+(tests/app_stores/test_scrape_stores.py:42-69) on the pure-Python oracle
+and on the JVM ``canonical_host``, plus cross-implementation equality on
+generated inputs: the pandas UDF helpers and the JVM ``with_canonical``
+against the row-wise ``canonical_url`` UDF and the per-row oracle."""
 
 import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from adscrawler_spark.functions.urls import canonical_host, root_domain, url_hash
+from adscrawler_spark.functions.psl import PUBLIC_SUFFIXES
+from adscrawler_spark.functions.urls import canonical_host, url_hash
 from adscrawler_spark.pyref import urls as pyref_urls
 
 GOLDEN = [
@@ -106,32 +107,70 @@ def test_url_hash_is_jvm_side(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_with_canonical_matches_rowwise_udf(spark):
-    """Dictionary-encoded canonicalization (JVM split + distinct-host
-    UDF + join back) must be byte-identical to the row-wise
-    canonical_url UDF."""
+_FIXED_URLS = [
+    "https://www.example.com/path/to/page?q=1&r=2",
+    "http://m.shop.co.uk/app-ads.txt",
+    "https://google-play-store.com/store/apps/details?id=com.app7&gl=us",
+    "user:pass@host.example.org:8080/p?q#frag",
+    "https://api.stripe.com",
+    "host-only.com",
+    "host.com?query=no-slash",
+    "https://x.ai/a#b/c",
+    "",
+    None,
+]
+
+_label = st.one_of(
+    # kept when not exactly 'm' / 'www': the reference compares the
+    # original-case labels, and lower-cases only the result
+    st.sampled_from(["www", "WWW", "Www", "m", "M", "mm", "www1", ""]),
+    st.from_regex(r"[a-z0-9\-]{1,8}", fullmatch=True),
+    st.text(st.characters(categories=("Lu", "Ll"), max_codepoint=0x4FF),
+            min_size=1, max_size=6),
+    st.integers(0, 999).map(str),
+)
+_suffix = st.sampled_from(sorted(PUBLIC_SUFFIXES)).flatmap(
+    lambda s: st.sampled_from([s, s.upper()])
+)
+_host = st.one_of(
+    _suffix,  # a bare suffix: 'com', 'CO.UK'
+    st.builds(lambda labels, sfx: ".".join([*labels, sfx]),
+              st.lists(_label, max_size=4), _suffix),
+    st.lists(_label, min_size=1, max_size=4).map(".".join),  # no suffix
+    st.lists(st.integers(0, 400).map(str), min_size=4, max_size=4).map(".".join),
+    st.lists(st.integers(0, 999).map(str), min_size=1, max_size=5).map(".".join),
+)
+_edge_url_strategy = st.builds(
+    lambda *parts: "".join(parts),
+    st.sampled_from(["", "http://", "https://", "HTTPS://", "htp://", "//"]),
+    st.sampled_from(["", "user@", "u:p@", "a@b@"]),
+    _host,
+    st.sampled_from(["", ":80", ":8080", ":"]),
+    st.sampled_from(["", "/", "/a/b.txt", "/x:y@z"]),
+    st.sampled_from(["", "?q=1", "?a=/b", "?x#y"]),
+    st.sampled_from(["", "#f", "#/a", "#?q"]),
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(st.lists(_edge_url_strategy, min_size=1, max_size=80))
+def test_with_canonical_matches_rowwise_udf(spark, drawn):
+    """The JVM with_canonical must be byte-identical to the row-wise
+    canonical_url UDF, and the JVM canonical_host to the per-row oracle,
+    on a fixed list plus generated URLs."""
     from adscrawler_spark.functions.urls import canonical_url
     from adscrawler_spark.operators.frontier import with_canonical
 
-    urls = [
-        "https://www.example.com/path/to/page?q=1&r=2",
-        "http://m.shop.co.uk/app-ads.txt",
-        "https://google-play-store.com/store/apps/details?id=com.app7&gl=us",
-        "user:pass@host.example.org:8080/p?q#frag",
-        "https://api.stripe.com",
-        "host-only.com",
-        "host.com?query=no-slash",
-        "https://x.ai/a#b/c",
-        "",
-        None,
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    urls = _FIXED_URLS + drawn
+    df = spark.createDataFrame(pd.DataFrame({"url": urls}), "url string")
     got = {
-        r.url: r.url_canon
-        for r in with_canonical(df).select("url", "url_canon").collect()
+        r.url: (r.url_canon, r.host)
+        for r in with_canonical(df)
+        .select("url", "url_canon", canonical_host("url").alias("host"))
+        .collect()
     }
     want = {
-        r.url: r.c
+        r.url: (r.c, pyref_urls.extract_domains_with_sub(r.url))
         for r in df.select("url", canonical_url("url").alias("c")).collect()
     }
     assert got == want
