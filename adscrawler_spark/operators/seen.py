@@ -1,17 +1,19 @@
-"""URL-seen set: partitioned Bloom filters + exact anti-join confirm,
-with a cuckoo-filter fallback for deletion support (SURVEY.md J2/§4;
-north_star requirement).
+"""URL-seen set: an exact anti-join, a partitioned Bloom pre-filter for
+seen sets above a size switch, and a cuckoo-filter fallback for
+deletion support (SURVEY.md J2/§4; north_star requirement).
 
 The reference's "seen" check is an in-Postgres anti-join over all
 store_ids (/root/reference/adscrawler/app_stores/utils.py:139-150).
-At 10^10 frontier scale a bare shuffle anti-join touches the full seen
-table every generation, so the engine keeps a *partitioned* Bloom
-sidecar: the seen table is hash-bucketed on ``xxhash64(url_canon)``,
-one Bloom bitset per bucket, built and probed with numpy over Arrow
-batches (no per-row Python).  A probe answers "definitely unseen" with
-no false negatives; the (fpp-small) maybe-seen remainder is confirmed
-by an exact anti-join that is co-partitioned on the same bucket key,
-so the expensive exact path only sees |new ∩ maybe| rows.
+``probe_unseen`` does the same — one ``left_anti`` join on
+``(url_hash64, url_canon)`` — for every seen set whose Bloom sidecar
+would fit ``BROADCAST_FILTER_BYTES`` (about 44.7M keys).  Above that it
+keeps a *partitioned* Bloom sidecar: the seen table is hash-bucketed on
+``xxhash64(url_canon)``, one Bloom bitset per bucket, built and probed
+with numpy over Arrow batches (no per-row Python).  A probe answers
+"definitely unseen" with no false negatives; the (fpp-small)
+maybe-seen remainder is confirmed by an exact anti-join against the
+whole seen table.  Nothing co-partitions that confirm on the bucket
+key, so its seen side is read and shuffled in full on every call.
 
 All string hashing stays JVM-side (``F.xxhash64``); Python only does
 integer arithmetic on the already-hashed values, so the filter is
@@ -26,7 +28,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -112,7 +113,7 @@ def build_bloom_filters(
     )
 
 
-BROADCAST_FILTER_BYTES = 64 << 20  # ≤64MB of bitsets → broadcast probe
+BROADCAST_FILTER_BYTES = 64 << 20  # ≤64MB of bitsets → exact anti-join
 
 
 def estimate_filter_bytes(n_keys: int, buckets: int = DEFAULT_BUCKETS) -> int:
@@ -134,116 +135,91 @@ def probe_unseen(
 ) -> DataFrame:
     """Rows of ``frontier`` whose url_canon is NOT in the seen set.
 
-    frontier must carry ``url_hash64`` and ``url_canon``.  Two probe
-    strategies, picked by sidecar size:
+    frontier must carry ``url_hash64`` and ``url_canon``; duplicate
+    frontier rows are all kept or all dropped, and a NULL url_canon
+    never matches, so it is kept.  The strategy is chosen from the
+    *seen-key count* (``seen_count`` if the caller knows it, else
+    ``seen.count()`` — metadata-only on a parquet scan) through the size
+    the Bloom sidecar would have, ``estimate_filter_bytes``; the sidecar
+    itself is never materialized to decide:
 
-    * **broadcast** (filters ≤ threshold): the bitsets ride inside a
-      scalar pandas UDF closure, so only the 8-byte hash column crosses
-      the Arrow boundary and the frontier never shuffles for the probe;
-    * **co-grouped** (the 10^10-scale path): frontier and filters
-      shuffle on the bucket key and probe group-by-group, keeping
-      per-executor memory at one bucket's bitset.
-
-    The strategy is chosen from the *seen-key count* (``seen_count`` if
-    the caller knows it, else ``seen.count()`` — metadata-only on a
-    parquet scan), never by materializing the sidecar: the build is
-    deterministic-sized, so the count implies the bytes.  That keeps
-    the bloom build a SINGLE pass over the seen set — no persist of the
-    bitsets, no extra size-aggregation action (the round-2 version paid
-    both and regressed 2× at small scale), and on the co-group path the
-    bitsets never visit the driver at all.
-
-    Only maybe-seen rows reach the exact anti-join confirm.  The probed
-    set is persisted because the maybe/unseen split consumes it twice;
-    the handle is appended to ``persisted`` (if given) so the caller
-    can unpersist once the result is materialized — Spark's
-    CacheManager holds persist entries strongly until an explicit
-    unpersist.
+    * **exact** (sidecar ≤ ``broadcast_threshold``; the 64 MB default
+      is about 44.7M keys): one ``left_anti`` join of the frontier
+      against ``seen`` on ``(url_hash64, url_canon)``.  ``filters`` is
+      lazy and never executed here, so there is no Bloom build, no
+      driver collect, no persist and no Python worker.  A Bloom
+      pre-filter does not pay here: its maybe-seen rows still need the
+      exact confirm against the whole seen table, and a broadcast Bloom
+      probe measured 1.9–3.8× slower in wall time at 34k–4.1M seen
+      keys, for frontiers 30% to 100% unseen (CHANGES.md has the
+      crossover table).
+    * **co-grouped Bloom** (above the threshold, the 10^10-scale path):
+      frontier and filters shuffle on the bucket key and probe group by
+      group, keeping per-executor memory at one bucket's bitset; the
+      bitsets never visit the driver.  Only maybe-seen rows reach the
+      exact confirm, but that anti-join still reads and shuffles the
+      *whole* seen table — nothing co-partitions it on the bucket — so
+      this path is unmeasured at the size it is meant for.  Its probed
+      set is persisted because the maybe/unseen split consumes it
+      twice; the handle is appended to ``persisted`` (if given) so the
+      caller can unpersist once the result is materialized — Spark's
+      CacheManager holds persist entries strongly until an explicit
+      unpersist.
     """
     if seen is None or filters is None:
         return frontier
 
+    seen_keys = seen.select(
+        F.col("url_hash64").alias("_seen_h"), F.col("url_canon").alias("_seen_canon")
+    )
+
+    def confirm_unseen(rows: DataFrame) -> DataFrame:
+        return rows.join(
+            seen_keys,
+            on=(rows["url_hash64"] == seen_keys["_seen_h"])
+            & (rows["url_canon"] == seen_keys["_seen_canon"]),
+            how="left_anti",
+        )
+
     if seen_count is None:
         seen_count = seen.count()
-    total_bytes = estimate_filter_bytes(seen_count, buckets)
+    if estimate_filter_bytes(seen_count, buckets) <= broadcast_threshold:
+        return confirm_unseen(frontier)
 
-    if total_bytes <= broadcast_threshold:
-        # All buckets' bitsets in one word array: bucket b's bitset is
-        # m_bits[b] bits from word offsets[b] on.  A bucket no seen key
-        # fell in gets one empty word, so its probes answer False.
-        m_bits = np.full(buckets, 64, dtype=np.uint64)
-        chunks = [np.zeros(1, dtype=np.uint64)] * buckets
-        k = NUM_HASHES
-        for r in filters.collect():
-            assert 0 <= r.bucket < buckets and r.k == k, (r.bucket, r.k)
-            m_bits[r.bucket] = r.m_bits
-            chunks[r.bucket] = np.frombuffer(bytes(r.bits), dtype=np.uint64)
-        offsets = np.cumsum([0] + [len(c) for c in chunks[:-1]])
-        # explicit broadcast: the bitsets ship once per executor, not
-        # once per task inside the UDF closure (tens of MB × thousands
-        # of tasks otherwise).
-        bc_table = frontier.sparkSession.sparkContext.broadcast(
-            (np.concatenate(chunks), offsets, m_bits)
-        )
+    # filters is consumed exactly once (by the cogroup) — no persist.
+    fr = frontier.withColumn("bucket", bucket_col(buckets=buckets))
+    out_schema = StructType(
+        list(fr.schema.fields) + [StructField("maybe_seen", BooleanType())]
+    )
+    cols = [f.name for f in fr.schema.fields]
 
-        @pandas_udf(BooleanType())
-        def bloom_maybe(h: pd.Series) -> pd.Series:
-            words, offsets, m_bits = bc_table.value
-            hv = h.to_numpy()
-            b = hv % buckets  # numpy % is non-negative for buckets > 0
-            pos = _positions(hv, k, m_bits[b][:, None])
-            idx = offsets[b][:, None] + (pos >> np.uint64(6)).astype(np.int64)
-            hit = (words[idx] >> (pos & np.uint64(63))) & np.uint64(1)
-            return pd.Series(hit.all(axis=1))
-
-        probed = frontier.withColumn(
-            "maybe_seen", bloom_maybe("url_hash64")
-        ).persist()
-    else:
-        # filters is consumed exactly once (by the cogroup) — no persist.
-        fr = frontier.withColumn("bucket", bucket_col(buckets=buckets))
-        out_schema = StructType(
-            list(fr.schema.fields) + [StructField("maybe_seen", BooleanType())]
-        )
-        cols = [f.name for f in fr.schema.fields]
-
-        def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            left = left[cols]
-            if left.empty or right.empty:
-                left = left.copy()
-                left["maybe_seen"] = pd.Series([False] * len(left), dtype=bool)
-                return left
-            m = int(right["m_bits"].iloc[0])
-            k = int(right["k"].iloc[0])
-            words = np.frombuffer(right["bits"].iloc[0], dtype=np.uint64)
-            pos = _positions(left["url_hash64"].to_numpy(), k, m)
-            hit = (words[(pos >> np.uint64(6)).astype(np.int64)]
-                   >> (pos & np.uint64(63))) & np.uint64(1)
-            left["maybe_seen"] = hit.all(axis=1)
+    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        left = left[cols]
+        if left.empty or right.empty:
+            left = left.copy()
+            left["maybe_seen"] = pd.Series([False] * len(left), dtype=bool)
             return left
+        m = int(right["m_bits"].iloc[0])
+        k = int(right["k"].iloc[0])
+        words = np.frombuffer(right["bits"].iloc[0], dtype=np.uint64)
+        pos = _positions(left["url_hash64"].to_numpy(), k, m)
+        hit = (words[(pos >> np.uint64(6)).astype(np.int64)]
+               >> (pos & np.uint64(63))) & np.uint64(1)
+        left["maybe_seen"] = hit.all(axis=1)
+        return left
 
-        probed = (
-            fr.groupBy("bucket")
-            .cogroup(filters.groupBy("bucket"))
-            .applyInPandas(probe, out_schema)
-            .drop("bucket")
-            .persist()
-        )
-
+    probed = (
+        fr.groupBy("bucket")
+        .cogroup(filters.groupBy("bucket"))
+        .applyInPandas(probe, out_schema)
+        .drop("bucket")
+        .persist()
+    )
     if persisted is not None:
         persisted.append(probed)
     definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     candidates = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    seen_keys = seen.select(
-        F.col("url_hash64").alias("_seen_h"), F.col("url_canon").alias("_seen_canon")
-    )
-    confirmed_new = candidates.join(
-        seen_keys,
-        on=(candidates["url_hash64"] == seen_keys["_seen_h"])
-        & (candidates["url_canon"] == seen_keys["_seen_canon"]),
-        how="left_anti",
-    )
-    return definitely_new.unionByName(confirmed_new)
+    return definitely_new.unionByName(confirm_unseen(candidates))
 
 
 class CuckooFilter:

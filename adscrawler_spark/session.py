@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -22,9 +23,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local SparkSession.
+    """Build (or reuse) a SparkSession, local unless launched with a master.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) else '*'.
+    ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) else '*',
+    and sets ``local[cores]`` only when no master was given at launch.
     On a real cluster the master/deploy settings come from spark-submit;
     everything here is cluster-size-agnostic.
     """
@@ -44,31 +46,41 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             _root + (os.pathsep + _pp if _pp else "")
         )
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.session.timeZone", "UTC")
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.compression.codec": "zstd",
+        "spark.sql.session.timeZone": "UTC",
         # Workers fork from a daemon that has pandas/pyarrow already
         # imported (adscrawler_spark/pydaemon.py) — the first Arrow
         # stage of a session otherwise pays a wave of per-worker
         # imports, re-paid whenever concurrent stages outrun the
         # idle-worker pool (guide §4: heavyweight init once).
-        .config("spark.python.daemon.module", "adscrawler_spark.pydaemon")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        "spark.python.daemon.module": "adscrawler_spark.pydaemon",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "16g"),
         # Big scans: keep input splits bounded so 100TB would still give
         # well-sized tasks; local tests are unaffected.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        **(extra_conf or {}),
+    }
+    # Start (or attach to) the JVM before choosing the master, with the
+    # settings that only count at launch (driver heap, JVM options), so
+    # that a master given to spark-submit, PYSPARK_SUBMIT_ARGS or
+    # spark-defaults.conf is visible and wins.  spark-submit fills in
+    # local[*] when it was given none, so that value counts as unset.
+    SparkContext._ensure_initialized(
+        conf=SparkConf(loadDefaults=False).setAll(conf.items())
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    master = SparkConf().get("spark.master", "local[*]")
+    if master == "local[*]":
+        master = f"local[{cores}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

@@ -452,10 +452,10 @@ def run_generation(
         .withColumn("url", F.concat(F.lit("https://"), F.col("ad_domain"), F.lit("/app-ads.txt")))
     )
     discovered = frontier_ops.with_canonical(discovered)
-    # discovery sets are tiny (distinct ad domains per generation); the
-    # exact anti-join against the seen table is cheaper than building a
-    # Bloom sidecar here.  The Bloom path (operators/seen.py) is for
-    # bulk frontier ingest, where the probe input is 10^8+ rows.
+    # discovery sets are tiny (distinct ad domains per generation), so
+    # this is the same exact anti-join that seen.probe_unseen runs below
+    # its size switch, on url_canon alone and with no size check: the
+    # Bloom sidecar is kept only for seen sets above ~44.7M keys.
     if seen_tbl is not None:
         new_urls = discovered.join(
             seen_tbl.select(F.col("url_canon").alias("_seen")),

@@ -54,8 +54,9 @@ def bench_queries(spark) -> dict[str, float]:
 
 def bench_dedup(spark) -> tuple[float, float]:
     """Frontier-dedup throughput: canonicalize → murmur3/xxhash →
-    partitioned-Bloom probe → exact anti-join confirm (BASELINE.json
-    metric #2). Seen set = first half of a synthetic frontier."""
+    seen-set probe (BASELINE.json metric #2): at the default size one
+    exact anti-join; the Bloom build stays lazy and never runs. Seen
+    set = first half of a synthetic frontier."""
     from pyspark.sql import functions as F
 
     from adscrawler_spark.operators import seen as seen_ops
@@ -73,7 +74,7 @@ def bench_dedup(spark) -> tuple[float, float]:
     # Untimed warm-up pass at 1/8 scale: bench/dedup_variance.py
     # measured the first dedup in a fresh session at ~240k rows/s vs
     # a ~555k ± 3k steady state (6-run study, BENCH/BASELINE.md) —
-    # the gap is codegen JIT + Arrow/bloom class loading, not the
+    # the gap is codegen JIT and first-use class loading, not the
     # operator.  Same principle as _warmup() for the query suite.
     wn = max(FRONTIER_N // 8, 1)
     wseen = seen.limit(wn // 2)

@@ -6,8 +6,9 @@ scaling efficiency = throughput(4N) / (4 × throughput(N)), and writes
 BENCH/BASELINE.md.
 
 Workloads (the BASELINE.json metrics):
-  1. frontier-dedup: parquet scan → partitioned-Bloom probe → exact
-     anti-join confirm (input frontier + seen set pre-written to
+  1. frontier-dedup: parquet scan → seen.probe_unseen (one exact
+     anti-join below its sidecar-size switch, a co-grouped Bloom probe
+     plus exact confirm above it) (input frontier + seen set pre-written to
      parquet, untimed — the production shape is reading a materialized
      frontier table, not regenerating it);
   2. schedule+fetch: one claim → robots/budget → salted repartition →
@@ -208,7 +209,7 @@ throughput(4N) / (4 × throughput(N)). Answer equality across
 parallelism is asserted (n_unseen / n_sigs identical).
 
 ## Workload 1 — frontier-dedup throughput
-(parquet scan → partitioned-Bloom probe → exact anti-join confirm;
+(parquet scan → seen.probe_unseen: exact anti-join below its size switch;
 {args.dedup_rows:,} frontier rows vs a {args.dedup_rows // 2:,}-row seen set)
 
 | cores | seconds | rows/sec |

@@ -480,3 +480,35 @@ def test_sent_video_match_uses_gram_index(spark):
     assert "instr" in plan, plan
     assert "CartesianProduct" not in plan
     assert "NestedLoopJoin" not in plan
+
+
+def test_exact_seen_probe_is_one_jvm_anti_join(spark, monkeypatch):
+    """Below the size switch the seen-set probe is one exact anti-join:
+    no pandas UDF, no cached probe, and no Bloom bitsets pulled through
+    the driver (the lazy build must never run)."""
+    from adscrawler_spark.operators.seen import (
+        build_bloom_filters,
+        probe_unseen,
+        with_url_hash64,
+    )
+
+    def canons(lo, hi):
+        return with_url_hash64(spark.range(lo, hi).select(
+            F.concat(F.lit("a.com/"), F.col("id")).alias("url_canon")))
+
+    seen, frontier = canons(0, 2000), canons(1000, 3000)
+    # the classic DataFrame class overrides pyspark.sql.DataFrame.collect
+    cls = type(seen)
+    orig = cls.collect
+
+    def guarded(self):
+        assert "bits" not in self.columns, "Bloom bitsets collected"
+        return orig(self)
+
+    monkeypatch.setattr(cls, "collect", guarded)
+    unseen = probe_unseen(frontier, build_bloom_filters(seen), seen)
+    assert len(unseen.collect()) == 1000
+    plan = _plan(unseen)
+    for node in ("ArrowEvalPython", "FlatMapGroupsInPandas",
+                 "FlatMapCoGroupsInPandas", "InMemoryRelation"):
+        assert node not in plan, (node, plan)

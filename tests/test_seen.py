@@ -1,5 +1,6 @@
-"""URL-seen set: partitioned Bloom (no false negatives, bounded fpp,
-exact-confirm correctness) and the cuckoo fallback (insert/delete)."""
+"""URL-seen set: exact set semantics on both sides of the size switch,
+the partitioned Bloom (no false negatives, bounded fpp) and the cuckoo
+fallback (insert/delete)."""
 
 import numpy as np
 import pytest
@@ -28,16 +29,48 @@ def seen_and_frontier(spark):
     return seen, frontier
 
 
-@pytest.mark.parametrize("threshold", [64 << 20, 0])
-def test_probe_exact_semantics(seen_and_frontier, threshold):
-    """Both probe strategies (broadcast UDF / co-grouped) must agree
-    with exact set semantics."""
+def _with_shared_hash(fr):
+    """Canons that are not seen but carry a seen canon's url_hash64, so
+    only the url_canon equality can keep them."""
+    return fr.unionByName(fr.sparkSession.range(0, 100).select(
+        F.concat(F.lit("other"), F.col("id"), F.lit(".com")).alias("url_canon"),
+        F.xxhash64(F.concat(F.lit("host"), F.col("id"), F.lit(".com"))).alias(
+            "url_hash64"),
+    ))
+
+
+FRONTIER_CASES = {
+    "half_seen": lambda fr: fr,
+    "duplicate_rows": lambda fr: fr.unionByName(
+        fr.filter(F.col("url_canon").endswith("7.com"))),
+    "null_canon": lambda fr: fr.unionByName(with_url_hash64(
+        fr.sparkSession.range(2).select(
+            F.lit(None).cast("string").alias("url_canon")))),
+    "shared_hash": _with_shared_hash,
+}
+
+
+@pytest.mark.parametrize("threshold,case", [
+    # the plain case keeps its bare-threshold id
+    pytest.param(t, c, id=str(t) if c == "half_seen" else f"{c}-{t}")
+    for t in (64 << 20, 0) for c in FRONTIER_CASES
+])
+def test_probe_exact_semantics(seen_and_frontier, threshold, case):
+    """Both strategies (exact anti-join / co-grouped Bloom) must keep
+    exactly the frontier rows, duplicates included, whose url_canon is
+    not in the seen set."""
     seen, frontier = seen_and_frontier
+    frontier = FRONTIER_CASES[case](frontier)
     filters = build_bloom_filters(seen)
     unseen = probe_unseen(frontier, filters, seen, broadcast_threshold=threshold)
-    got = {r.url_canon for r in unseen.collect()}
-    want = {f"host{i}.com" for i in range(5000, 9000)}
-    assert got == want  # no false positives after confirm, no false negatives
+    seen_set = {r.url_canon for r in seen.collect()}
+    want = [r.url_canon for r in frontier.collect() if r.url_canon not in seen_set]
+    got = [r.url_canon for r in unseen.collect()]
+
+    def key(c):
+        return (c is None, c or "")
+
+    assert sorted(got, key=key) == sorted(want, key=key)
 
 
 def test_bloom_prefilter_rate(seen_and_frontier):
@@ -71,16 +104,17 @@ def test_cogroup_path_never_collects_bitsets(seen_and_frontier, monkeypatch):
     would be ~GBs at the 10^10-key scale the sidecar is sized for."""
     seen, frontier = seen_and_frontier
     filters = build_bloom_filters(seen)
-    from pyspark.sql import DataFrame
-
-    orig = DataFrame.collect
+    # patch the class the session's DataFrames really are: the classic
+    # DataFrame overrides pyspark.sql.DataFrame.collect
+    cls = type(frontier)
+    orig = cls.collect
 
     def guarded(self):
         if any(f.name == "bits" for f in self.schema.fields):
             raise AssertionError("bitset DataFrame collected on co-group path")
         return orig(self)
 
-    monkeypatch.setattr(DataFrame, "collect", guarded)
+    monkeypatch.setattr(cls, "collect", guarded)
     unseen = probe_unseen(frontier, filters, seen, broadcast_threshold=0)
     assert unseen.count() == 4000
 
